@@ -15,6 +15,7 @@ compute N→4N scaling efficiency).
 from __future__ import annotations
 
 import argparse
+import contextlib
 import json
 import time
 
@@ -48,9 +49,12 @@ def main() -> None:
     cores = spark.sparkContext.defaultParallelism
     if not args.aligned and docs.rdd.getNumPartitions() < cores:
         docs = docs.repartition(cores * 2)
+    ids = contextlib.ExitStack()
     if args.assign_id:
-        # persist: the assignment shuffle must not re-run per downstream stage
-        docs = assign_doc_ids(docs, ["repo", "path", "commit"]).persist()
+        # the numbered docs stay valid while the assignment block is open
+        docs, _ = ids.enter_context(
+            assign_doc_ids(docs, ["repo", "path", "commit"])
+        )
 
     # Prewarm the Python worker pool (one worker per core spawns lazily and
     # costs ~0.5-1s each, serialized).  On a long-lived cluster this is a
@@ -75,6 +79,7 @@ def main() -> None:
         "job": "build_index", "docs": n, "seconds": round(dt, 3),
         "docs_per_sec": round(n / dt, 2), "parallelism": cores,
     }))
+    ids.close()
     spark.stop()
 
 

@@ -9,12 +9,19 @@ deleted docs still count toward idf until segments are merged.
 
 Spark-native layout: tombstones are extra rows in the unified index
 parquet (term = ``\\x00__del__``, ``id_bytes`` = raw sorted int64 doc
-ids, one row per touched segment per delete batch), written with a
-plain parquet append.  They ride the existing pruned scan (every query
-adds the tombstone term to its ``term IN (...)`` pushdown) and arrive
-in the per-segment kernel with zero plan changes — no driver-side
-delete set, no broadcast, bounded by the deletes that actually live in
-that segment.
+ids, one row per touched segment per delete batch).  They ride the
+existing pruned scan (every query adds the tombstone term to its
+``term IN (...)`` pushdown) and arrive in the per-segment kernel with
+zero plan changes — no driver-side delete set, no broadcast, bounded by
+the deletes that actually live in that segment.
+
+A delete is metadata work, like the reference's delete-log entry on the
+index writer: it runs on the DRIVER with pyarrow and starts no Spark job.
+Original ids resolve through a filtered read of the docmap files, live
+slots are checked against the sentinel rows of the touched segments
+only, and the new tombstone rows land as ONE part file renamed into the
+main index directory (:func:`~stractt_spark.plans.build.write_parquet_part`).
+Like ``stats.json``, the index directory must be driver-local.
 
 ``merge_indexes`` applies tombstones during its decode (postings of
 deleted docs are dropped, doc maps shrink, stats are recomputed from
@@ -24,9 +31,15 @@ compaction: ``compact_index`` is sugar for it.
 
 from __future__ import annotations
 
+import json
+import os
+
 import numpy as np
-import pandas as pd
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import SparkSession
+
+from ..plans.build import IndexPaths, parquet_files, write_parquet_part
+from ..streaming.ingest import batch_docmap_dir, registered_paths
+from .segments import DELETES_TERM, NORMS_SENTINEL, SEGMENTS_SCHEMA
 
 
 def delete_docs(
@@ -51,13 +64,9 @@ def delete_docs(
     tombstoned index raises until compaction — truncated posting lists
     can no longer guarantee ``max_docs`` live higher-pre matches above
     the cut."""
-    import json
-    import os
-
-    from ..plans.build import IndexPaths
-    from .segments import DELETES_TERM
-
-    from pyspark.sql import functions as F
+    import pyarrow as pa
+    import pyarrow.dataset as pads
+    from pyspark.sql.pandas.types import to_arrow_schema
 
     paths = IndexPaths(index_dir)
     with open(paths.stats) as f:
@@ -73,79 +82,35 @@ def delete_docs(
 
     if stats.get("presorted"):
         # caller speaks ORIGINAL ids; tombstones store INTERNAL ids
-        from ..streaming.ingest import batch_docmap_dir
-
         dm_dirs = [paths.docmap] + [
             batch_docmap_dir(index_dir, b)
             for b in stats.get("stream_batches", [])
         ]
-        dm = spark.read.parquet(
-            *[d for d in dm_dirs if os.path.isdir(d)]
-        )
-        req = spark.createDataFrame(
-            [(i,) for i in ids], "orig_id long"
-        )
-        rows = (
-            dm.join(req, "orig_id", "left_semi")
-            .select("doc_id").collect()
-        )
-        internal = sorted(int(r["doc_id"]) for r in rows)
+        dm = pads.dataset(
+            parquet_files(*[d for d in dm_dirs if os.path.isdir(d)]),
+            format="parquet",
+        ).to_table(columns=["doc_id"], filter=pads.field("orig_id").isin(ids))
+        internal = np.unique(dm.column("doc_id").to_numpy())
     else:
-        cand = [i for i in ids if 0 <= i < stats.get(
+        cand = np.asarray([i for i in ids if 0 <= i < stats.get(
             "next_doc_id", stats["num_docs"]
-        )]
-        # validate against LIVE doc slots, not just the id range: streamed
-        # / aligned builds leave gap slots (dl=0, no postings) inside the
-        # span, and compaction's delete accounting joins tombstones
-        # against decode_exact_dls — which emits every slot — so a
-        # phantom tombstone would be subtracted from num_docs/avgdl.
-        # Bounded: the scan is filtered to sentinel rows and the result
-        # to the candidate ids (O(len(ids)) driver rows).
-        internal = []
-        if cand:
-            from ..streaming.ingest import registered_paths
-
-            unified = spark.read.parquet(*registered_paths(index_dir, stats))
-            if stats.get("multifield"):
-                from .merge import decode_mf_norms
-                from .multifield import MF_NORMS_PREFIX
-
-                dls = decode_mf_norms(unified.filter(
-                    F.col("term").startswith(MF_NORMS_PREFIX)
-                )).groupBy("doc_id").agg(F.sum("dl").alias("dl"))
-            else:
-                from .merge import decode_exact_dls
-                from .segments import split_unified
-
-                _, nrm = split_unified(unified)
-                dls = decode_exact_dls(nrm)
-            req = spark.createDataFrame(
-                [(i,) for i in cand], "doc_id long"
-            )
-            live_rows = (
-                dls.filter(F.col("dl") > 0)
-                .join(req, "doc_id", "left_semi")
-                .select("doc_id").collect()
-            )
-            internal = sorted(int(r["doc_id"]) for r in live_rows)
+        )], dtype=np.int64)
+        internal = _live_slots(index_dir, stats, cand)
     # drop ids already tombstoned (idempotent re-delete)
-    existing = read_tombstones(spark, index_dir)
-    if existing.size:
-        internal = [i for i in internal if i not in set(existing.tolist())]
-    if not internal:
+    arr = np.setdiff1d(internal, _tombstones(index_dir, stats))
+    if not arr.size:
         return 0
 
-    arr = np.asarray(internal, dtype=np.int64)
-    segs = (arr // dps).astype(np.int64)
-    out_rows = []
+    segs = arr // dps
+    rows = []
     for seg in np.unique(segs):
         seg_ids = arr[segs == seg]
-        out_rows.append({
+        rows.append({
             "segment_id": int(seg),
             "term": DELETES_TERM,
             "block_id": -1,
-            "first_doc_id": int(seg_ids.min()),
-            "last_doc_id": int(seg_ids.max()),
+            "first_doc_id": int(seg_ids[0]),
+            "last_doc_id": int(seg_ids[-1]),
             "num_docs": int(seg_ids.size),
             "id_bytes": seg_ids.tobytes(),
             "tf_bytes": b"",
@@ -153,13 +118,9 @@ def delete_docs(
             "max_tf": 0,
             "min_norm_id": 0,
         })
-    from .segments import SEGMENTS_SCHEMA
-
-    pdf = pd.DataFrame(out_rows)
-    (
-        spark.createDataFrame(pdf, SEGMENTS_SCHEMA)
-        .write.mode("append").parquet(paths.index)
-    )
+    write_parquet_part(paths.index, pa.Table.from_pylist(
+        rows, schema=to_arrow_schema(SEGMENTS_SCHEMA)
+    ))
     stats["deleted_docs"] = int(stats.get("deleted_docs", 0) + arr.size)
     tmp = paths.stats + ".tmp"
     with open(tmp, "w") as f:
@@ -168,32 +129,72 @@ def delete_docs(
     return int(arr.size)
 
 
-def read_tombstones(spark: SparkSession, index_dir: str) -> np.ndarray:
-    """All tombstoned INTERNAL ids of an index (sorted, deduped) — a
-    driver-side array for compaction-time bookkeeping and tests; query
-    kernels never call this (they read the per-segment rows off the
-    scan)."""
-    import json
+def _live_slots(index_dir: str, stats: dict, cand: np.ndarray) -> np.ndarray:
+    """The ``cand`` internal ids that are LIVE doc slots.
 
-    from ..plans.build import IndexPaths
-    from ..streaming.ingest import registered_paths
-    from .segments import DELETES_TERM
+    Validates against live slots, not just the id range: streamed /
+    aligned builds leave gap slots (dl=0, no postings) inside the span,
+    and compaction's delete accounting joins tombstones against every
+    decoded slot — so a phantom tombstone would be subtracted from
+    num_docs/avgdl.  Reads only the sentinel rows of the segments the
+    candidates fall in; a multi-field doc is live when any field holds a
+    token."""
+    import pyarrow.dataset as pads
 
-    from pyspark.sql import functions as F
+    from .merge import mf_sentinel_dls, sentinel_dls
+    from .multifield import MF_NORMS_PREFIX
 
-    paths = IndexPaths(index_dir)
-    with open(paths.stats) as f:
-        stats = json.load(f)
-    rows = (
-        spark.read.parquet(*registered_paths(index_dir, stats))
-        .filter(F.col("term") == DELETES_TERM)
-        .select("id_bytes").collect()
+    if not cand.size:
+        return cand
+    mf = stats.get("multifield")
+    terms = (
+        [MF_NORMS_PREFIX + f_ for f_ in mf["fields"]] if mf
+        else [NORMS_SENTINEL]
     )
-    if not rows:
+    segs = np.unique(cand // int(stats["docs_per_segment"])).tolist()
+    cols = ["first_doc_id", "num_docs", "id_bytes", "tf_bytes"]
+    tbl = pads.dataset(
+        parquet_files(*registered_paths(index_dir, stats)), format="parquet"
+    ).to_table(
+        columns=cols,
+        filter=pads.field("term").isin(terms)
+        & pads.field("segment_id").isin(segs),
+    )
+    live = []
+    for base, span, norm_bytes, meta_bytes in zip(
+        *(tbl.column(c).to_pylist() for c in cols)
+    ):
+        dls = (
+            mf_sentinel_dls(meta_bytes, norm_bytes) if mf
+            else sentinel_dls(meta_bytes, span, norm_bytes)
+        )
+        live.append(base + np.flatnonzero(dls > 0))
+    if not live:
+        return cand[:0]
+    return np.intersect1d(cand, np.concatenate(live))
+
+
+def _tombstones(index_dir: str, stats: dict) -> np.ndarray:
+    import pyarrow.dataset as pads
+
+    tbl = pads.dataset(
+        parquet_files(*registered_paths(index_dir, stats)), format="parquet"
+    ).to_table(columns=["id_bytes"], filter=pads.field("term") == DELETES_TERM)
+    blobs = tbl.column("id_bytes").to_pylist()
+    if not blobs:
         return np.zeros(0, dtype=np.int64)
     return np.unique(np.concatenate([
-        np.frombuffer(bytes(r["id_bytes"]), dtype=np.int64) for r in rows
+        np.frombuffer(b, dtype=np.int64) for b in blobs
     ]))
+
+
+def read_tombstones(spark: SparkSession, index_dir: str) -> np.ndarray:
+    """All tombstoned INTERNAL ids of an index (sorted, deduped) — a
+    driver-side array for compaction-time bookkeeping and tests, read
+    with pyarrow (no Spark job); query kernels never call this (they
+    read the per-segment rows off the scan)."""
+    with open(IndexPaths(index_dir).stats) as f:
+        return _tombstones(index_dir, json.load(f))
 
 
 def compact_index(

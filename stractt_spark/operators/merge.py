@@ -341,54 +341,56 @@ def merge_indexes(
     return out
 
 
-def decode_exact_dls(norms: DataFrame) -> DataFrame:
-    """Sentinel rows → exact per-doc token counts ``(doc_id, dl)``.
+def sentinel_dls(meta_bytes: bytes, span: int, norm_bytes: bytes) -> np.ndarray:
+    """One main sentinel row → the EXACT token count of each of its
+    ``span`` doc slots (0 for gap slots).
 
-    The fused build's main sentinel carries the EXACT span-aligned per-doc
+    The fused build's main sentinel carries the exact span-aligned per-doc
     token counts after its 5 metric values (segments.py meta_row) — the
-    quantized norm bytes alone cannot reproduce them, and the merged
-    index's sentinels must carry them again (trailing-anchor goggle
-    patterns read the tail).  Emits every span slot including dl=0 gap
-    ids; joins against the docmap drop those.
-
-    Legacy sentinels (written before the exact-dl tail existed) have no
-    tail — mirror decode_mf_norms and fall back to the quantized
-    ``FIELD_NORMS_TABLE[norm_id]`` dls rather than emitting a
-    mismatched-length Series (NaN column → opaque Arrow failure in the
+    quantized norm bytes alone cannot reproduce them.  Legacy sentinels
+    (written before the exact-dl tail existed) have no tail: fall back to
+    the quantized ``FIELD_NORMS_TABLE[norm_id]`` dls rather than a
+    mismatched-length array (NaN column → opaque Arrow failure in the
     presorted-merge / delete-accounting consumers)."""
     from ..functions.codec import varint_decode
     from ..functions.fieldnorm import FIELD_NORMS_TABLE
+
+    tail = varint_decode(bytes(meta_bytes))[5:5 + span]
+    if len(tail) == span:
+        return np.asarray(tail, dtype=np.int64)
+    # legacy pre-tail sentinel: quantized dls from the packed norm bytes
+    # (rebuild the index for exact stats)
+    narr = np.frombuffer(bytes(norm_bytes), dtype=np.uint8)
+    if len(narr) != span:
+        raise ValueError(
+            "corrupt sentinel: no exact-dl tail and "
+            f"norm_bytes span {len(narr)} != n_docs {span}"
+            " — rebuild the index for exact stats"
+        )
+    return FIELD_NORMS_TABLE[narr.astype(np.int64)].astype(np.int64)
+
+
+def decode_exact_dls(norms: DataFrame) -> DataFrame:
+    """Sentinel rows → exact per-doc token counts ``(doc_id, dl)``
+    (:func:`sentinel_dls` per row).  The merged index's sentinels must
+    carry them again (trailing-anchor goggle patterns read the tail).
+    Emits every span slot including dl=0 gap ids; joins against the
+    docmap drop those."""
 
     def run(pdfs):
         for pdf in pdfs:
             outs = []
             for _, r in pdf.iterrows():
-                vals = varint_decode(bytes(r["meta_bytes"]))
                 span = int(r["n_docs"])
-                base = int(r["base_doc_id"])
-                tail = vals[5:5 + span]
-                if len(tail) == span:
-                    dl = np.asarray(tail, dtype=np.int64)
-                else:
-                    # legacy pre-tail sentinel: quantized dls from the
-                    # packed norm bytes (rebuild the index for exact stats)
-                    narr = np.frombuffer(
-                        bytes(r["norm_bytes"]), dtype=np.uint8
-                    )
-                    if len(narr) != span:
-                        raise ValueError(
-                            "corrupt sentinel: no exact-dl tail and "
-                            f"norm_bytes span {len(narr)} != n_docs {span}"
-                            " — rebuild the index for exact stats"
-                        )
-                    dl = FIELD_NORMS_TABLE[narr.astype(np.int64)].astype(
-                        np.int64
-                    )
                 outs.append(pd.DataFrame({
                     "doc_id": pd.Series(
-                        base + np.arange(span, dtype=np.int64), dtype="int64"
+                        int(r["base_doc_id"]) + np.arange(span, dtype=np.int64),
+                        dtype="int64",
                     ),
-                    "dl": pd.Series(dl, dtype="int64"),
+                    "dl": pd.Series(
+                        sentinel_dls(r["meta_bytes"], span, r["norm_bytes"]),
+                        dtype="int64",
+                    ),
                 }))
             if outs:
                 yield pd.concat(outs, ignore_index=True)
@@ -534,13 +536,28 @@ def decode_blocks(
     return segments.groupBy("segment_id").applyInPandas(run, schema)
 
 
+def mf_sentinel_dls(tf_bytes: bytes, norm_bytes: bytes) -> np.ndarray:
+    """One per-field norm sentinel row → the EXACT per-doc token counts of
+    its span slots, from the varint tail after [field tokens, n docs]."""
+    from ..functions.codec import varint_decode
+
+    narr = np.frombuffer(bytes(norm_bytes), dtype=np.uint8)
+    tail = varint_decode(bytes(tf_bytes))[2:2 + len(narr)]
+    if len(tail) == len(narr):
+        return np.asarray(tail, dtype=np.int64)
+    # legacy sentinel without the dl tail: quantized dls
+    # (pre-tail indexes; rebuild for exact stats)
+    from ..functions.fieldnorm import FIELD_NORMS_TABLE
+
+    return FIELD_NORMS_TABLE[narr.astype(np.int64)].astype(np.int64)
+
+
 def decode_mf_norms(mf_norm_rows: DataFrame) -> DataFrame:
     """Per-field packed norm sentinel rows →
     ``(doc_id, field, norm_id, dl)`` for every span slot (gap slots come
     out norm 0 / dl 0; callers filter).  ``dl`` is the EXACT per-doc
-    token count from the sentinel's varint tail — what makes merged /
+    token count (:func:`mf_sentinel_dls`) — what makes merged /
     compacted multi-field stats exact rather than quantized."""
-    from ..functions.codec import varint_decode
     from .multifield import MF_NORMS_PREFIX
 
     plen = len(MF_NORMS_PREFIX)
@@ -551,18 +568,6 @@ def decode_mf_norms(mf_norm_rows: DataFrame) -> DataFrame:
             for _, r in pdf.iterrows():
                 narr = np.frombuffer(bytes(r["id_bytes"]), dtype=np.uint8)
                 base = int(r["first_doc_id"])
-                vals = varint_decode(bytes(r["tf_bytes"]))
-                tail = vals[2:2 + len(narr)]
-                if len(tail) == len(narr):
-                    dl = np.asarray(tail, dtype=np.int64)
-                else:
-                    # legacy sentinel without the dl tail: quantized dls
-                    # (pre-tail indexes; rebuild for exact stats)
-                    from ..functions.fieldnorm import FIELD_NORMS_TABLE
-
-                    dl = FIELD_NORMS_TABLE[narr.astype(np.int64)].astype(
-                        np.int64
-                    )
                 outs.append(pd.DataFrame({
                     "doc_id": pd.Series(
                         base + np.arange(len(narr), dtype=np.int64),
@@ -571,7 +576,10 @@ def decode_mf_norms(mf_norm_rows: DataFrame) -> DataFrame:
                                        dtype="object"),
                     "norm_id": pd.Series(narr.astype(np.int32),
                                          dtype="int32"),
-                    "dl": pd.Series(dl, dtype="int64"),
+                    "dl": pd.Series(
+                        mf_sentinel_dls(r["tf_bytes"], r["id_bytes"]),
+                        dtype="int64",
+                    ),
                 }))
             if outs:
                 yield pd.concat(outs, ignore_index=True)
@@ -776,9 +784,10 @@ def _merge_multifield(
         ranked = all_dm.select("orig_id", "pre_score").withColumn(
             "_neg_pre", -F.col("pre_score")
         )
-        assign_doc_ids(ranked, ["_neg_pre", "orig_id"]).select(
-            "doc_id", "orig_id", "pre_score"
-        ).write.mode("overwrite").parquet(out.docmap)
+        with assign_doc_ids(ranked, ["_neg_pre", "orig_id"]) as (ids, _):
+            ids.select("doc_id", "orig_id", "pre_score").write.mode(
+                "overwrite"
+            ).parquet(out.docmap)
         next_doc_id = num_docs
     else:
         offsets, acc = [], 0
@@ -1011,9 +1020,10 @@ def _merge_presorted(
     ranked = all_dm.select("orig_id", "pre_score").withColumn(
         "_neg_pre", -F.col("pre_score")
     )
-    assign_doc_ids(ranked, ["_neg_pre", "orig_id"]).select(
-        "doc_id", "orig_id", "pre_score"
-    ).write.mode("overwrite").parquet(out.docmap)
+    with assign_doc_ids(ranked, ["_neg_pre", "orig_id"]) as (ids, _):
+        ids.select("doc_id", "orig_id", "pre_score").write.mode(
+            "overwrite"
+        ).parquet(out.docmap)
     # two INDEPENDENT reads: the remapped postings and the doc side both
     # descend from the docmap — sharing one scan makes the final cogroup
     # an (ambiguous) self-join in the analyzer

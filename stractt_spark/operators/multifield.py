@@ -448,10 +448,10 @@ def build_index_fused_multifield(
             )
             .withColumn("_neg_pre", -F.col("pre_score"))
         )
-        docmap = assign_doc_ids(ranked, ["_neg_pre", "orig_id"]).select(
-            "doc_id", "orig_id", "pre_score"
-        )
-        docmap.write.mode("overwrite").parquet(paths.docmap)
+        with assign_doc_ids(ranked, ["_neg_pre", "orig_id"]) as (ids, _):
+            ids.select("doc_id", "orig_id", "pre_score").write.mode(
+                "overwrite"
+            ).parquet(paths.docmap)
         docmap_df = spark.read.parquet(paths.docmap)
         missing = (
             docs.select(F.col(id_col).cast("long").alias("_orig"))

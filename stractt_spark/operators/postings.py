@@ -26,6 +26,7 @@ input_hint.
 from __future__ import annotations
 
 from collections.abc import Iterator
+from contextlib import contextmanager
 
 import pandas as pd
 from pyspark.sql import DataFrame
@@ -55,61 +56,66 @@ POSTINGS_POS_SCHEMA = StructType(
 )
 
 
+@contextmanager
 def assign_doc_ids(
     df: DataFrame, order_cols: list[str], num_partitions: int | None = None
-) -> DataFrame:
-    """Add a deterministic global ``doc_id`` = rank in the total order of
-    ``order_cols`` (must be a unique key, e.g. (repo, path, commit)).
+) -> Iterator[tuple[DataFrame, int]]:
+    """Context manager yielding ``(docs, n)``: ``df`` plus a deterministic
+    global ``doc_id`` = rank in the total order of ``order_cols`` (must be
+    a unique key, e.g. (repo, path, commit)), and the row count.
 
     Scale shape: range-repartition on the key, sort within partitions, then
     ``doc_id = partition_offset + local_index`` where offsets are prefix
     sums of per-partition counts — the same deferred docID remap the
-    reference applies at segment merge
-    (``/root/reference/src/inverted_index.rs:308-355``).  The id depends
-    only on the total order, not on the partition count.
+    reference applies at segment merge (src/inverted_index.rs:308-355).
+    The id depends only on the total order, not on the partition count.
+
+    The range-sorted intermediate is persisted for the life of the block:
+    the counts pass and every consumer of ``docs`` must see the SAME split
+    into partitions, and Spark re-samples the range bounds each time it
+    re-executes a ``repartitionByRange`` — without the cache, offsets
+    counted on one split numbered rows of another (repeated and missing
+    ids).  Write everything derived from ``docs`` inside the block; the
+    intermediate is released on exit.
     """
-    spark = df.sparkSession
-    n = num_partitions or int(spark.conf.get("spark.sql.shuffle.partitions"))
-    part = df.repartitionByRange(n, *[F.col(c) for c in order_cols]).sortWithinPartitions(
-        *order_cols
+    from ..session import shuffle_partitions
+
+    n_parts = num_partitions or shuffle_partitions(df.sparkSession)
+    part = (
+        df.repartitionByRange(n_parts, *[F.col(c) for c in order_cols])
+        .sortWithinPartitions(*order_cols)
+        .persist()
     )
-    return assign_ids_on_sorted(part, n)
+    try:
+        counts = (
+            part.select(F.spark_partition_id().alias("_pid"))
+            .groupBy("_pid")
+            .count()
+            .collect()
+        )
+        sizes = {r["_pid"]: r["count"] for r in counts}
+        offsets: dict[int, int] = {}
+        acc = 0
+        for pid in range(n_parts):
+            offsets[pid] = acc
+            acc += sizes.get(pid, 0)
+        out_schema = StructType(
+            part.schema.fields + [StructField("doc_id", LongType(), False)]
+        )
 
+        def add_ids(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+            from pyspark import TaskContext
 
-def assign_ids_on_sorted(part: DataFrame, n: int) -> DataFrame:
-    """Second half of :func:`assign_doc_ids`: ``part`` must already be
-    range-partitioned into ``n`` partitions and sorted within each by the
-    order key.  Exposed so a caller can ``persist()`` the sorted
-    intermediate and pay the range-sample + shuffle + sort ONCE instead of
-    twice (the counts pass and the id-assignment pass both execute
-    ``part``'s subtree otherwise) — and ``unpersist()`` it the moment the
-    assigned ids are materialized."""
-    counts = (
-        part.withColumn("_pid", F.spark_partition_id())
-        .groupBy("_pid")
-        .count()
-        .collect()
-    )
-    sizes = {r["_pid"]: r["count"] for r in counts}
-    offsets: dict[int, int] = {}
-    acc = 0
-    for pid in range(n):
-        offsets[pid] = acc
-        acc += sizes.get(pid, 0)
-    out_schema = StructType(part.schema.fields + [StructField("doc_id", LongType(), False)])
+            seen = offsets.get(TaskContext.get().partitionId(), 0)
+            for pdf in batches:
+                pdf = pdf.copy()
+                pdf["doc_id"] = range(seen, seen + len(pdf))
+                seen += len(pdf)
+                yield pdf
 
-    def add_ids(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from pyspark import TaskContext
-
-        pid = TaskContext.get().partitionId()
-        seen = offsets.get(pid, 0)
-        for pdf in batches:
-            pdf = pdf.copy()
-            pdf["doc_id"] = range(seen, seen + len(pdf))
-            seen += len(pdf)
-            yield pdf
-
-    return part.mapInPandas(add_ids, out_schema)
+        yield part.mapInPandas(add_ids, out_schema), acc
+    finally:
+        part.unpersist()
 
 
 def build_postings(

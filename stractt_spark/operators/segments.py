@@ -445,11 +445,10 @@ def build_segments_fused(
         # exempt from AQE coalescing, so the kernel keeps
         # spark.sql.shuffle.partitions-way parallelism (cluster-configured;
         # segments per task still bounded below by the segment layout).
-        n_shuffle = int(
-            src.sparkSession.conf.get("spark.sql.shuffle.partitions")
-        )
+        from ..session import shuffle_partitions
+
         return (
-            src.repartition(n_shuffle, "segment_id")
+            src.repartition(shuffle_partitions(src.sparkSession), "segment_id")
             .groupBy("segment_id")
             .applyInPandas(encode, SEGMENTS_SCHEMA)
         )

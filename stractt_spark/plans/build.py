@@ -156,6 +156,34 @@ def _write_manifest(paths: IndexPaths, manifest: dict) -> None:
     os.replace(tmp, paths.manifest)
 
 
+def parquet_files(*dirs: str) -> list[str]:
+    """The data files of parquet directories, for driver-side pyarrow
+    reads (pyarrow datasets take files, not Spark's directories).  Skips
+    the ``_``/``.`` names Spark's reader skips too: ``_SUCCESS``, checksum
+    files, in-flight temporaries."""
+    return sorted(
+        os.path.join(d, f)
+        for d in dirs
+        for f in os.listdir(d)
+        if f.endswith(".parquet") and not f.startswith(("_", "."))
+    )
+
+
+def write_parquet_part(dir_path: str, table) -> None:
+    """Add ``table`` to a parquet directory as ONE new part file, written
+    from the driver under a hidden temporary name and renamed into place,
+    so a reader never lists a half-written file."""
+    import uuid
+
+    import pyarrow.parquet as pq
+
+    os.makedirs(dir_path, exist_ok=True)
+    name = uuid.uuid4().hex
+    tmp = os.path.join(dir_path, f".part-{name}.tmp")
+    pq.write_table(table, tmp)
+    os.replace(tmp, os.path.join(dir_path, f"part-{name}.parquet"))
+
+
 def _append_lineage(spark: SparkSession, paths: IndexPaths, rows: list[dict]) -> None:
     """Append lineage rows as ONE parquet part file written directly from
     the driver (pyarrow) — the rows are a per-segment handful of scalars
@@ -165,10 +193,7 @@ def _append_lineage(spark: SparkSession, paths: IndexPaths, rows: list[dict]) ->
     unchanged: ``spark.read.parquet(lineage_dir)`` sees the same rows."""
     if not rows:
         return
-    import uuid
-
     import pyarrow as pa
-    import pyarrow.parquet as pq
 
     table = pa.table(
         {
@@ -191,11 +216,7 @@ def _append_lineage(spark: SparkSession, paths: IndexPaths, rows: list[dict]) ->
             ),
         }
     )
-    os.makedirs(paths.lineage, exist_ok=True)
-    tmp = os.path.join(paths.lineage, f".part-{uuid.uuid4().hex}.tmp")
-    final = os.path.join(paths.lineage, f"part-{uuid.uuid4().hex}.parquet")
-    pq.write_table(table, tmp)
-    os.replace(tmp, final)
+    write_parquet_part(paths.lineage, table)
 
 
 class StageAborted(RuntimeError):
@@ -428,7 +449,7 @@ def build_index_fused(
     if pre_scores is not None:
         pre_col = "_pre_score"
         if not done("docmap"):
-            from ..operators.postings import assign_ids_on_sorted
+            from ..operators.postings import assign_doc_ids
 
             ranked = (
                 pre_scores.select(
@@ -437,21 +458,10 @@ def build_index_fused(
                 )
                 .withColumn("_neg_pre", -F.col("pre_score"))
             )
-            # persist the range-sorted intermediate: the id assignment
-            # needs two passes over it (per-partition counts, then the
-            # offset map) — without the cache each pass re-runs the range
-            # SAMPLE + shuffle + sort of the whole pre_scores projection
-            n_rp = int(spark.conf.get("spark.sql.shuffle.partitions"))
-            sorted_part = ranked.repartitionByRange(
-                n_rp, F.col("_neg_pre"), F.col("orig_id")
-            ).sortWithinPartitions("_neg_pre", "orig_id").persist()
-            try:
-                docmap = assign_ids_on_sorted(sorted_part, n_rp).select(
-                    "doc_id", "orig_id", "pre_score"
-                )
-                docmap.write.mode("overwrite").parquet(paths.docmap)
-            finally:
-                sorted_part.unpersist()
+            with assign_doc_ids(ranked, ["_neg_pre", "orig_id"]) as (ids, _):
+                ids.select("doc_id", "orig_id", "pre_score").write.mode(
+                    "overwrite"
+                ).parquet(paths.docmap)
             mark("docmap")
         docmap_df = spark.read.parquet(paths.docmap)
         # the docs↔docmap join is INNER: a doc with no pre_score row would
@@ -610,11 +620,7 @@ def _local_term_df(
     try:
         import pyarrow.dataset as pads
 
-        files = sorted(
-            os.path.join(term_stats_dir, f)
-            for f in os.listdir(term_stats_dir)
-            if f.endswith(".parquet") and not f.startswith(("_", "."))
-        )
+        files = parquet_files(term_stats_dir)
         if files:
             tbl = pads.dataset(files, format="parquet").to_table(
                 columns=["term", "df"],

@@ -41,3 +41,14 @@ def get_spark(
     for k, v in (extra_conf or {}).items():
         b = b.config(k, v)
     return b.getOrCreate()
+
+
+def shuffle_partitions(spark) -> int:
+    """``spark.sql.shuffle.partitions`` as an int.  Platforms with
+    auto-sized shuffles report the string ``"auto"`` there; fall back to
+    the cluster's default parallelism instead of raising."""
+    value = spark.conf.get("spark.sql.shuffle.partitions")
+    try:
+        return int(value)
+    except ValueError:
+        return spark.sparkContext.defaultParallelism

@@ -32,7 +32,17 @@ semantics.
 Micro-batch doc ids: assigned deterministically from ``order_cols``
 (a unique key) starting at a fresh segment boundary after the high-water
 mark, so existing segments are never rewritten (the deferred-remap
-invariant of operators/merge.py).
+invariant of operators/merge.py).  They are assigned ONCE, over a
+persisted range-sorted intermediate that the presorted docmap write and
+the encode both read; the assignment's per-partition counts give the
+batch size, so no separate count runs.
+
+Only data-proportional work runs as Spark jobs: the id assignment, the
+docmap write, the encode + write of the batch, and the ``term_stats``
+merge.  Metadata stays on the driver, like the reference's segment
+commit (flush the writer, reload the reader): the token totals come
+from the batch's sentinel rows read with pyarrow, and Spark reads of the
+batch and ``term_stats`` carry explicit schemas (no inference job).
 """
 
 from __future__ import annotations
@@ -43,8 +53,15 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..operators.segments import NORMS_SENTINEL, build_segments_fused
-from ..plans.build import IndexPaths
+from ..operators.postings import assign_doc_ids
+from ..operators.segments import (
+    NORMS_SENTINEL,
+    SEGMENTS_SCHEMA,
+    build_segments_fused,
+)
+from ..plans.build import IndexPaths, parquet_files
+
+TERM_STATS_SCHEMA = "term string, df long"
 
 
 def batch_dir(index_dir: str, batch_id: int) -> str:
@@ -121,13 +138,8 @@ def append_batch(
     dps = stats["docs_per_segment"]
     hwm = stats.get("next_doc_id", stats["num_docs"])
 
-    n_new = batch_df.count()
-    if n_new == 0:
-        return
     # ids start at a fresh segment boundary after the high-water mark
     base = ((hwm + dps - 1) // dps) * dps
-    from ..operators.postings import assign_doc_ids
-
     pre_col = None
     if presorted:
         id_col = stats.get("id_col", "doc_id")
@@ -137,61 +149,66 @@ def append_batch(
                 "in the batch (docmap orig_id)"
             )
         pre_col = "_pre"
-        ranked = (
+        src = (
             batch_df.withColumnRenamed(id_col, "_orig")
             .withColumn(pre_col, F.col(pre_score_col).cast("double"))
             .withColumn("_neg_pre", -F.col(pre_col))
         )
-        docs = assign_doc_ids(ranked, ["_neg_pre", "_orig"]).withColumn(
-            "doc_id", F.col("doc_id") + F.lit(base)
-        )
-        bdocmap = batch_docmap_dir(index_dir, batch_id)
-        (
-            docs.select(
-                "doc_id", F.col("_orig").cast("long").alias("orig_id"),
-                F.col(pre_col).alias("pre_score"),
-            )
-            .write.mode("overwrite").parquet(bdocmap)
-        )
+        order = ["_neg_pre", "_orig"]
     else:
         src = batch_df.drop("doc_id") if "doc_id" in batch_df.columns else batch_df
-        docs = assign_doc_ids(src, list(order_cols)).withColumn(
-            "doc_id", F.col("doc_id") + F.lit(base)
-        )
+        order = list(order_cols)
 
-    if mf is not None:
-        # per-field namespaces: the batch tokenizes the SAME columns into
-        # the SAME '\x02field\x1ftoken' terms as the build, with per-field
-        # norm sentinel rows — one shared encoder guarantees it
-        from ..operators.multifield import build_segments_fused_multifield
-
-        fields = sorted(mf["fields"])
-        fcols = mf["field_cols"]
-        src = docs.select(
-            "doc_id",
-            *[F.col(fcols[f_]).alias(f"_f_{f_}") for f_ in fields],
-            *[F.col(c).cast("string").alias(f"_a_{c}")
-              for c in (attr_cols or [])],
-            *([F.col(pre_col).alias("_pre")] if pre_col else []),
-        ).withColumn(
-            "segment_id", (F.col("doc_id") / F.lit(dps)).cast("int")
-        )
-        unified = build_segments_fused_multifield(
-            src, fields, analyzer, dps,
-            positions=positions, with_pre=pre_col is not None,
-            attr_cols=attr_cols,
-        )
-    else:
-        unified = build_segments_fused(
-            docs, text_col, "doc_id", analyzer, dps,
-            include_positions=positions, attr_cols=attr_cols, pre_col=pre_col,
-        )
     bdir = batch_dir(index_dir, batch_id)
-    (
-        unified.sortWithinPartitions("segment_id", "term", "block_id")
-        .write.mode("overwrite")  # idempotent claim: retry rewrites in place
-        .parquet(bdir)
-    )
+    # ids are assigned ONCE: the docmap write and the encode below both
+    # read the same persisted range-sorted intermediate
+    with assign_doc_ids(src, order) as (ids, n_new):
+        if n_new == 0:
+            return
+        docs = ids.withColumn("doc_id", F.col("doc_id") + F.lit(base))
+        if presorted:
+            (
+                docs.select(
+                    "doc_id", F.col("_orig").cast("long").alias("orig_id"),
+                    F.col(pre_col).alias("pre_score"),
+                )
+                .write.mode("overwrite")
+                .parquet(batch_docmap_dir(index_dir, batch_id))
+            )
+        if mf is not None:
+            # per-field namespaces: the batch tokenizes the SAME columns
+            # into the SAME '\x02field\x1ftoken' terms as the build, with
+            # per-field norm sentinel rows — one shared encoder
+            # guarantees it
+            from ..operators.multifield import build_segments_fused_multifield
+
+            fields = sorted(mf["fields"])
+            fcols = mf["field_cols"]
+            unified = build_segments_fused_multifield(
+                docs.select(
+                    "doc_id",
+                    *[F.col(fcols[f_]).alias(f"_f_{f_}") for f_ in fields],
+                    *[F.col(c).cast("string").alias(f"_a_{c}")
+                      for c in (attr_cols or [])],
+                    *([F.col(pre_col).alias("_pre")] if pre_col else []),
+                ).withColumn(
+                    "segment_id", (F.col("doc_id") / F.lit(dps)).cast("int")
+                ),
+                fields, analyzer, dps,
+                positions=positions, with_pre=pre_col is not None,
+                attr_cols=attr_cols,
+            )
+        else:
+            unified = build_segments_fused(
+                docs, text_col, "doc_id", analyzer, dps,
+                include_positions=positions, attr_cols=attr_cols,
+                pre_col=pre_col,
+            )
+        (
+            unified.sortWithinPartitions("segment_id", "term", "block_id")
+            .write.mode("overwrite")  # idempotent claim: retry rewrites in place
+            .parquet(bdir)
+        )
 
     # INCREMENTAL derived tables: doc spaces are disjoint, so the new
     # term_stats is old ⊎ batch-delta (sum of dfs) — the job reads the
@@ -202,7 +219,8 @@ def append_batch(
     # already-folded batch ids travels INSIDE the term_stats directory
     # (_folded.json, swapped atomically with the data): a retry after a
     # crash between the swap and the ledger commit skips the re-merge.
-    batch_unified = spark.read.parquet(bdir)
+    # Explicit schemas: no schema-inference job per read.
+    batch_unified = spark.read.schema(SEGMENTS_SCHEMA).parquet(bdir)
     _recover_dir(paths.term_stats)
     folded_marker = os.path.join(paths.term_stats, "_folded.json")
     folded: list[int] = []
@@ -216,7 +234,9 @@ def append_batch(
         # whose retried content differs — self-heal with a FULL recompute
         # from the ledgered paths plus this batch (the round-2 incremental
         # path had no rebuild story for this divergence)
-        full = spark.read.parquet(*registered_paths(index_dir, stats))
+        full = spark.read.schema(SEGMENTS_SCHEMA).parquet(
+            *registered_paths(index_dir, stats)
+        )
         tmp_dir = paths.term_stats + ".tmp"
         merged_term_stats(
             full.filter(~F.col("term").startswith("\x00"))
@@ -229,19 +249,37 @@ def append_batch(
     elif batch_id not in folded:
         tmp_dir = paths.term_stats + ".tmp"
         merged_term_stats(
-            spark.read.parquet(paths.term_stats), batch_unified
+            spark.read.schema(TERM_STATS_SCHEMA).parquet(paths.term_stats),
+            batch_unified,
         ).write.mode("overwrite").parquet(tmp_dir)
         with open(os.path.join(tmp_dir, "_folded.json"), "w") as f:
             json.dump(folded + [batch_id], f)
         _swap_dir(paths.term_stats)
 
-    from ..functions.codec import varint_decode
+    # token totals from the batch's sentinel rows, read on the driver:
+    # the main sentinel carries [total tokens, ...], each multi-field
+    # per-field sentinel [field tokens, ...]
+    import pyarrow.dataset as pads
 
-    meta = (
-        batch_unified.filter(F.col("term") == NORMS_SENTINEL)
-        .select("tf_bytes").collect()
+    from ..functions.codec import varint_decode
+    from ..operators.multifield import MF_NORMS_PREFIX
+
+    fields = sorted(mf["fields"]) if mf is not None else []
+    meta = pads.dataset(parquet_files(bdir), format="parquet").to_table(
+        columns=["term", "tf_bytes"],
+        filter=pads.field("term").isin(
+            [NORMS_SENTINEL] + [MF_NORMS_PREFIX + f_ for f_ in fields]
+        ),
     )
-    batch_tokens = sum(int(varint_decode(bytes(r["tf_bytes"]))[0]) for r in meta)
+    batch_tokens = 0
+    for term, tf_bytes in zip(
+        meta.column("term").to_pylist(), meta.column("tf_bytes").to_pylist()
+    ):
+        total = int(varint_decode(tf_bytes)[0])
+        if term == NORMS_SENTINEL:
+            batch_tokens += total
+        else:
+            mf["field_totals"][term[len(MF_NORMS_PREFIX):]] += total
 
     # single atomic commit: ledger + stats together
     stats["num_docs"] = int(stats["num_docs"] + n_new)
@@ -251,18 +289,7 @@ def append_batch(
         stats["total_tokens"] / stats["num_docs"] if stats["num_docs"] else 0.0
     )
     if mf is not None:
-        # per-field avgdl from exact integer token totals: the batch's
-        # per-field norm sentinel rows carry [field_tokens, n_docs]
-        from ..operators.multifield import MF_NORMS_PREFIX
-
-        for r in (
-            batch_unified.filter(F.col("term").startswith(MF_NORMS_PREFIX))
-            .select("term", "tf_bytes").collect()
-        ):
-            f_ = r["term"][len(MF_NORMS_PREFIX):]
-            mf["field_totals"][f_] += int(
-                varint_decode(bytes(r["tf_bytes"]))[0]
-            )
+        # per-field avgdl from exact integer token totals
         mf["avgdl"] = {
             f_: mf["field_totals"][f_] / stats["num_docs"]
             for f_ in mf["field_totals"]

@@ -79,9 +79,11 @@ def test_assign_doc_ids_partition_invariant(spark):
     rows = make_corpus(300)
     data = [(r["repo"], r["path"], r["commit"]) for r in rows]
     df = spark.createDataFrame(data, "repo string, path string, commit string")
-    a = assign_doc_ids(df.repartition(3), ["repo", "path", "commit"], num_partitions=4)
-    b = assign_doc_ids(df.repartition(11), ["repo", "path", "commit"], num_partitions=7)
-    pa = {(r["repo"], r["path"]): r["doc_id"] for r in a.collect()}
-    pb = {(r["repo"], r["path"]): r["doc_id"] for r in b.collect()}
+    key = ["repo", "path", "commit"]
+    with assign_doc_ids(df.repartition(3), key, num_partitions=4) as (a, na):
+        pa = {(r["repo"], r["path"]): r["doc_id"] for r in a.collect()}
+    with assign_doc_ids(df.repartition(11), key, num_partitions=7) as (b, nb):
+        pb = {(r["repo"], r["path"]): r["doc_id"] for r in b.collect()}
+    assert na == nb == 300
     assert pa == pb
     assert sorted(pa.values()) == list(range(300))

@@ -39,25 +39,28 @@ def _df(spark, rows):
 def corpora(spark):
     shutil.rmtree(BASE, ignore_errors=True)
     rows = make_corpus(120)
-    docs = assign_doc_ids(_df(spark, rows), ["repo", "path", "commit"])
+    # yield inside the block: later tests reuse the numbered docs, which
+    # stay valid only while the id assignment holds its intermediate
+    with assign_doc_ids(_df(spark, rows), ["repo", "path", "commit"]) as (
+        docs, _,
+    ):
+        plain_dir = f"{BASE}/plain"
+        build_index_fused(spark, docs, plain_dir, docs_per_segment=64)
 
-    plain_dir = f"{BASE}/plain"
-    build_index_fused(spark, docs, plain_dir, docs_per_segment=64)
+        from pyspark.sql import functions as F
 
-    from pyspark.sql import functions as F
+        pre = docs.select("doc_id", (F.length("content") * 0.001).alias("pre_score"))
+        presorted_dir = f"{BASE}/presorted"
+        build_index_fused(
+            spark, docs, presorted_dir, docs_per_segment=64, pre_scores=pre
+        )
 
-    pre = docs.select("doc_id", (F.length("content") * 0.001).alias("pre_score"))
-    presorted_dir = f"{BASE}/presorted"
-    build_index_fused(
-        spark, docs, presorted_dir, docs_per_segment=64, pre_scores=pre
-    )
-
-    mf_dir = f"{BASE}/mf"
-    build_index_fused_multifield(
-        spark, docs, mf_dir, {"path": "path", "content": "content"},
-        docs_per_segment=64,
-    )
-    return docs, plain_dir, presorted_dir, mf_dir
+        mf_dir = f"{BASE}/mf"
+        build_index_fused_multifield(
+            spark, docs, mf_dir, {"path": "path", "content": "content"},
+            docs_per_segment=64,
+        )
+        yield docs, plain_dir, presorted_dir, mf_dir
 
 
 def test_merge_refuses_multifield_source(spark, corpora):

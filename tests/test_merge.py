@@ -107,20 +107,24 @@ def test_merge_includes_streamed_batches(spark, tmp_path_factory):
     dps = 48
     # source 0: 100 docs built, then 50 streamed in one batch
     d0 = str(root / "src0")
-    build_index_fused(
-        spark, assign_doc_ids(df_of(rows[:100]), ["repo", "path", "commit"]),
-        d0, text_col="content", docs_per_segment=dps,
-    )
+    with assign_doc_ids(df_of(rows[:100]), ["repo", "path", "commit"]) as (
+        docs, _,
+    ):
+        build_index_fused(
+            spark, docs, d0, text_col="content", docs_per_segment=dps,
+        )
     append_batch(spark, df_of(rows[100:150]), batch_id=0, index_dir=d0)
     base_stream = ((100 + dps - 1) // dps) * dps  # 144
     span0 = base_stream + 50  # next_doc_id of source 0
 
     # source 1: plain 60-doc build
     d1 = str(root / "src1")
-    build_index_fused(
-        spark, assign_doc_ids(df_of(rows[150:]), ["repo", "path", "commit"]),
-        d1, text_col="content", docs_per_segment=dps,
-    )
+    with assign_doc_ids(df_of(rows[150:]), ["repo", "path", "commit"]) as (
+        docs, _,
+    ):
+        build_index_fused(
+            spark, docs, d1, text_col="content", docs_per_segment=dps,
+        )
 
     merged_dir = str(root / "merged")
     merge_indexes(spark, [d0, d1], merged_dir, docs_per_segment=64)

@@ -27,9 +27,11 @@ def streamed(spark):
     # initial batch index over the first 300 docs (ids = rank by key)
     from stractt_spark.operators.postings import assign_doc_ids
 
-    initial = assign_doc_ids(df_of(rows[:300]), ["repo", "path", "commit"])
     idx_dir = f"{BASE}/index"
-    build_index_fused(spark, initial, idx_dir, docs_per_segment=dps)
+    with assign_doc_ids(df_of(rows[:300]), ["repo", "path", "commit"]) as (
+        initial, _,
+    ):
+        build_index_fused(spark, initial, idx_dir, docs_per_segment=dps)
 
     # stream two more files, one micro-batch each
     from stractt_spark.streaming.ingest import stream_ingest
@@ -178,8 +180,10 @@ def test_append_retry_after_partial_commit_is_idempotent(spark):
             "repo string, path string, commit string, content string",
         )
 
-    initial = assign_doc_ids(df_of(rows[:150]), ["repo", "path", "commit"])
-    build_index_fused(spark, initial, base_dir, docs_per_segment=64)
+    with assign_doc_ids(df_of(rows[:150]), ["repo", "path", "commit"]) as (
+        initial, _,
+    ):
+        build_index_fused(spark, initial, base_dir, docs_per_segment=64)
     stats_path = f"{base_dir}/stats.json"
     with open(stats_path) as f:
         pre_batch_stats = f.read()  # exact pre-crash stats.json
